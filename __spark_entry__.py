@@ -89,12 +89,13 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def q_convert_html(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """E1 via the real pipeline UDF: deterministic HTML wrapping of documents
-    rows, extracted back out; oracle reconstructs the expected text."""
-    from article_extraction_spark.extract.udfs import to_text_udf
+    """E1 via the real pipeline extraction stage: deterministic HTML wrapping
+    of documents rows, extracted back out; oracle reconstructs the expected
+    text."""
+    from article_extraction_spark.extract.udfs import extract_stage
 
-    # r8: fan the single-split scan out — the Arrow extraction UDF otherwise
-    # runs in the scan's one task (see _spread)
+    # r8: fan the single-split scan out — the Arrow extraction stage
+    # otherwise runs in the scan's one task (see _spread)
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text", "lang"))
     payload = F.concat(
         F.lit("<header>nav</header><p>"),
@@ -103,9 +104,9 @@ def q_convert_html(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("lang"),
         F.lit("</p><footer>x</footer>"),
     )
-    res = docs.select(
-        "doc_id", to_text_udf(F.lit("html"), payload).alias("_r")
-    ).select("doc_id", F.col("_r.extracted_text").alias("extracted_text"))
+    res = extract_stage(
+        docs.select("doc_id", F.lit("html").alias("doc_kind"), payload.alias("text"))
+    ).select("doc_id", "extracted_text")
     return res.where(F.length("extracted_text") > 0)
 
 
@@ -372,12 +373,12 @@ def q_fuzzy_country_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multimodal plumbing: binary payload → mapInPandas feature extraction
-    (hash + size are engine-portable; the fake feature vector is not output)."""
+    """Multimodal plumbing: binary payload → mapInArrow feature extraction
+    (hash + size are engine-portable; the feature vector is not output)."""
     docs = _t(spark, sf_dir, "documents")
     # r8: spread the single-split scan (the feature kernel ran in 1-2 scan
-    # tasks) and use the zero-copy mapInArrow twin (parity-tested; hashes
-    # memoryview slices of the Arrow buffer instead of per-row bytes)
+    # tasks); the stage hashes memoryview slices of the Arrow buffer
+    # instead of per-row bytes
     media = _spread(docs.select("doc_id", "text", "n_chars")).select(
         F.col("doc_id").alias("media_id"),
         F.when(F.col("doc_id") % 3 == 0, F.lit("image"))
@@ -390,9 +391,9 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(None).cast("int").alias("height"),
         (F.col("n_chars") % 10000).cast("int").alias("duration_ms"),
     )
-    from article_extraction_spark.operators.multimodal import extract_media_features_arrow
+    from article_extraction_spark.operators.multimodal import extract_media_features
 
-    return extract_media_features_arrow(media).select(
+    return extract_media_features(media).select(
         "media_id", "kind", "n_bytes", "content_hash"
     )
 
@@ -1096,7 +1097,7 @@ def q_qa_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-star readability scoring (text/link density, tag blocklist).
     Rows-only check (heuristic scorer)."""
-    from article_extraction_spark.extract.readability import readability_udf
+    from article_extraction_spark.extract.udfs import extract_stage
 
     docs = _spread(_t(spark, sf_dir, "documents").select("doc_id", "text"))
     page = F.concat(
@@ -1105,11 +1106,14 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("text"),
         F.lit("</p></article><footer>contact</footer></body></html>"),
     )
-    out = docs.select("doc_id", readability_udf(page).alias("r"))
+    out = extract_stage(
+        docs.select("doc_id", F.lit("html").alias("doc_kind"), page.alias("text")),
+        with_readability=True,
+    )
     return out.select(
         "doc_id",
-        F.col("r.n_blocks").alias("n_blocks"),
-        (F.col("r.max_block_score") > 25).alias("has_main_content"),
+        "n_blocks",
+        (F.col("max_block_score") > 25).alias("has_main_content"),
     )
 
 
@@ -1366,12 +1370,10 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF LAYOUT analysis (north rule: column detection, reading-order
     sort, header/footer removal), value-oracled: 20 deterministic two-page
     PDFs — page 1 is two-column positioned text, page 2 carries a running
-    header/footer that must be stripped — go through the Arrow-batched
-    layout kernel; the oracle derives the expected reading-order text from
+    header/footer that must be stripped — go through the extraction stage
+    in layout mode; the oracle derives the expected reading-order text from
     the same id formula in pure SQL."""
-    from pyspark.sql import types as T
-
-    from article_extraction_spark.extract.pdf_layout import pdf_layout_extract_fn
+    from article_extraction_spark.extract.udfs import extract_stage
     from article_extraction_spark.fixtures.synth import make_layout_pdf_bytes
 
     rows = []
@@ -1386,13 +1388,10 @@ def q_pdf_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
             compress=(i % 2 == 0),
         )
         rows.append((i, bytearray(pdf)))
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-
-    def _kernel(p):
-        return p.map(pdf_layout_extract_fn)
-
-    layout_udf = F.pandas_udf(_kernel, T.StringType())
-    return df.select("doc_id", layout_udf("payload").alias("text"))
+    df = spark.createDataFrame(rows, "doc_id long, text binary").select(
+        "doc_id", F.lit("pdf").alias("doc_kind"), "text"
+    )
+    return extract_stage(df, pdf_mode="layout").select("doc_id", F.col("extracted_text").alias("text"))
 
 
 def q_collapse_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2697,7 +2696,7 @@ def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ladder's confidence constant for every row."""
     import codecs
 
-    from article_extraction_spark.extract.charset import detect_decode_udf
+    from article_extraction_spark.extract.charset import detect_decode_stage
 
     _ensure_shipped(spark)
     SUF = " — café ±15° €"
@@ -2721,15 +2720,10 @@ def q_charset_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = (
         _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200).select("doc_id", "text")
     )
-    det = docs.withColumn(
-        "payload", make_payload(F.col("doc_id"), F.col("text"))
-    ).withColumn("d", detect_decode_udf()(F.col("payload")))
-    return det.select(
-        "doc_id",
-        F.col("d.text").alias("decoded"),
-        F.col("d.encoding").alias("encoding"),
-        F.col("d.confidence").alias("confidence"),
+    det = detect_decode_stage(
+        docs.select("doc_id", make_payload(F.col("doc_id"), F.col("text")).alias("payload")), "payload"
     )
+    return det.select("doc_id", "decoded", "encoding", "confidence")
 
 
 def q_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,15 +29,13 @@ Detection order (each step short-circuits):
 The reference's ``errors="ignore"`` path
 (`extract.core.decode_utf8_ignore`) stays the DEFAULT everywhere
 byte-parity with the reference matters; detection is opt-in via
-`detect_decode` / `detect_decode_udf`.
+`detect_decode` / `detect_decode_stage`.
 """
 
 from __future__ import annotations
 
 import codecs
 import re
-
-import pandas as pd
 
 _BOMS: list[tuple[bytes, str]] = [
     (codecs.BOM_UTF8, "utf-8-sig"),
@@ -93,14 +91,24 @@ def detect_decode(data: bytes | None) -> tuple[str, str, float]:
     return data.decode("latin-1"), "latin-1", 0.6
 
 
-def detect_decode_udf():
-    """Arrow-batched (binary payload) → struct<text, encoding, confidence>;
-    pair with a filter on ``confidence`` to quarantine unsure rows."""
-    from pyspark.sql import functions as F
+def detect_decode_stage(df, payload_col: str):
+    """``df`` plus ``decoded``, ``encoding`` and ``confidence`` from
+    `detect_decode` over the binary ``payload_col``, as one ``mapInArrow``
+    stage; pair with a filter on ``confidence`` to quarantine unsure rows."""
+    from pyspark.sql import types as T
 
-    @F.pandas_udf("text string, encoding string, confidence double")
-    def _udf(payloads: pd.Series) -> pd.DataFrame:
-        rows = [detect_decode(p) for p in payloads]
-        return pd.DataFrame(rows, columns=["text", "encoding", "confidence"])
+    out_fields = [("decoded", T.StringType()), ("encoding", T.StringType()), ("confidence", T.DoubleType())]
+    schema = T.StructType(df.schema.fields + [T.StructField(n, t, True) for n, t in out_fields])
 
-    return _udf
+    def op(batches):
+        import pyarrow as pa
+
+        types = [pa.string(), pa.string(), pa.float64()]
+        for batch in batches:
+            rows = [detect_decode(p) for p in batch.column(payload_col).to_pylist()]
+            cols = [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)]
+            yield pa.RecordBatch.from_arrays(
+                batch.columns + cols, names=batch.schema.names + [n for n, _ in out_fields]
+            )
+
+    return df.mapInArrow(op, schema)

@@ -5,7 +5,9 @@ oracle: tag-blocklist boilerplate stripping plus text-density / link-density
 scoring per container, so real-world pages whose main content is not marked
 up with ``<p>`` still yield a main-text candidate. The per-turn equality
 contract stays with extract.core.extract_html; this module's outputs go to
-separate diagnostic columns.
+separate diagnostic columns, which the extraction stage
+(extract/udfs.py:extract_stage, ``with_readability=True``) fills for html
+rows from ``readability_fields``.
 
 Public-knowledge heuristics (Arc90 readability.js, boilerpipe paper
 Kohlschütter et al., WSDM 2010): blocklisted structural tags score 0; text
@@ -16,9 +18,7 @@ from __future__ import annotations
 
 from html.parser import HTMLParser
 
-import pandas as pd
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
+MIN_SCORE = 25.0  # blocks at or above this score make up the main text
 
 BLOCKLIST_TAGS = frozenset(
     {
@@ -109,38 +109,30 @@ def score_blocks(html: str) -> list[dict]:
     return out
 
 
-def readability_main_text(html: str, min_score: float = 25.0) -> str:
+def _main_text(blocks: list[dict], min_score: float) -> str:
+    return "\n".join(b["text"] for b in blocks if b["score"] >= min_score)
+
+
+def readability_main_text(html: str, min_score: float = MIN_SCORE) -> str:
     """Concatenate above-threshold blocks in document order."""
-    blocks = [b for b in score_blocks(html) if b["score"] >= min_score]
-    return "\n".join(b["text"] for b in blocks)
+    return _main_text(score_blocks(html), min_score)
 
 
-_READABILITY_TYPE = T.StructType(
-    [
-        T.StructField("main_text", T.StringType(), True),
-        T.StructField("n_blocks", T.IntegerType(), True),
-        T.StructField("max_block_score", T.DoubleType(), True),
-        T.StructField("link_density", T.DoubleType(), True),
-    ]
-)
-
-
-@F.pandas_udf(_READABILITY_TYPE)
-def readability_udf(html: pd.Series) -> pd.DataFrame:
-    rows = []
-    for doc in html:
-        if not doc:
-            rows.append(("", 0, 0.0, 0.0))
-            continue
-        blocks = score_blocks(doc)
-        total = sum(b["chars"] for b in blocks) or 1
-        links = sum(b["link_density"] * b["chars"] for b in blocks)
-        rows.append(
-            (
-                readability_main_text(doc),
-                len(blocks),
-                max((b["score"] for b in blocks), default=0.0),
-                links / total,
-            )
-        )
-    return pd.DataFrame(rows, columns=["main_text", "n_blocks", "max_block_score", "link_density"])
+def readability_fields(html: str | bytes | None) -> tuple[str, int, float, float]:
+    """(main_text, n_blocks, max_block_score, link_density) of one page from
+    a single ``score_blocks`` pass; link_density is char-weighted over all
+    blocks. Bytes decode as utf-8, dropping invalid sequences (as
+    core.extract_html does). The per-row kernel of the extraction stage's
+    readability columns (extract/udfs.py)."""
+    if not html:
+        return "", 0, 0.0, 0.0
+    if isinstance(html, bytes):
+        html = html.decode("utf-8", "ignore")
+    blocks = score_blocks(html)
+    total = sum(b["chars"] for b in blocks) or 1
+    return (
+        _main_text(blocks, MIN_SCORE),
+        len(blocks),
+        max((b["score"] for b in blocks), default=0.0),
+        sum(b["link_density"] * b["chars"] for b in blocks) / total,
+    )

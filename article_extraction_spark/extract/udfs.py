@@ -1,71 +1,50 @@
-"""Vectorized (Arrow-batched) Spark surface of the extraction kernels.
+"""The Spark surface of the extraction kernels.
 
-Per BASELINE.json ``input_hint``: pandas/Arrow UDFs only, no per-row Python
-UDFs. Classification stays entirely JVM-side (native column expressions);
-only the genuinely-custom kernels (HTML state machine, PDF parse,
-utf-8-ignore decode) cross into Python, and they do so one Arrow batch at a
-time through a single struct-returning pandas UDF (one Arrow pass for text +
-spans, E4's single-dispatch shape).
+Classification stays entirely JVM-side (``classify_payload_col``, native
+column expressions). Only the genuinely custom kernels (HTML state machine,
+PDF parse, utf-8-ignore decode, readability scoring) cross into Python, and
+every caller crosses through the one ``mapInArrow`` stage built by
+``extract_stage``: one Arrow record batch in, one out, with the spans column
+assembled from flat int arrays per batch (no per-span Python objects).
 """
 
 from __future__ import annotations
 
-import pandas as pd
-from pyspark.sql import Column
+import functools
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .core import SNIFF_PREFIX, to_text
+from .pdf_layout import pdf_layout_extract_fn
+from .readability import readability_fields
 
-_EXTRACT_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            True,
+_RESULT_FIELDS = [
+    T.StructField("extracted_text", T.StringType(), True),
+    T.StructField(
+        "spans",
+        T.ArrayType(
+            T.StructType(
+                [
+                    T.StructField("start", T.IntegerType(), False),
+                    T.StructField("end", T.IntegerType(), False),
+                ]
+            )
         ),
-        T.StructField("error", T.StringType(), True),
-    ]
-)
+        True,
+    ),
+    T.StructField("extract_error", T.StringType(), True),
+]
 
-
-@F.pandas_udf(_EXTRACT_RESULT_TYPE)
-def _to_text_udf_impl(doc_kind: pd.Series, payload: pd.Series) -> pd.DataFrame:
-    """E1-E4 in one Arrow pass: (kind, payload) → (text, spans, error).
-
-    Conversion failures don't fail the task: the row carries the error and
-    is dropped downstream while lineage counts it (the reference logs and
-    continues, tables/paper_text_table.py:150-152)."""
-    texts: list[str] = []
-    spans: list[list[dict[str, int]]] = []
-    errors: list[str | None] = []
-    for kind, data in zip(doc_kind, payload):
-        err = None
-        try:
-            text, sp = to_text(kind, data)
-        except Exception as exc:  # noqa: BLE001
-            text, sp, err = "", [], f"{type(exc).__name__}: {exc}"[:500]
-        texts.append(text)
-        spans.append([{"start": s, "end": e} for s, e in sp])
-        errors.append(err)
-    return pd.DataFrame({"extracted_text": texts, "spans": spans, "error": errors})
-
-
-# The extraction IS deterministic; the marking only disables filter pushdown
-# THROUGH the UDF projection. Without it, a downstream drop-empty filter is
-# pushed below the salted shuffle and Catalyst evaluates the UDF TWICE per
-# row (once pre-shuffle for the filter, once post-shuffle for the project) —
-# observed in the physical plan as two ArrowEvalPython nodes and 2× the
-# extraction cost at bench scale.
-to_text_udf = _to_text_udf_impl.asNondeterministic()
+# html rows only; see readability.readability_fields
+_READABILITY_FIELDS = [
+    T.StructField("readability_text", T.StringType(), True),
+    T.StructField("n_blocks", T.IntegerType(), True),
+    T.StructField("max_block_score", T.DoubleType(), True),
+    T.StructField("link_density", T.DoubleType(), True),
+]
+_NO_READABILITY = (None, None, None, None)
 
 
 def classify_payload_col(text: Column) -> Column:
@@ -100,45 +79,46 @@ def classify_payload_col(text: Column) -> Column:
     )
 
 
-# -- Arrow-native extraction stage (r8) --------------------------------------
-# The pandas-UDF path pays twice per batch: Series iteration on input and a
-# python-dict-per-span list on output that pandas→Arrow converts object by
-# object (measured +17 µs/row on a 22 µs/row kernel). The mapInArrow twin
-# consumes the record batch directly and assembles the spans column from flat
-# int arrays (one ListArray/StructArray build per batch, no per-span dicts).
-# Semantics are IDENTICAL: same to_text kernel, same error capture.
-
-_EXTRACT_BATCH_SCHEMA = T.StructType(
-    [
-        T.StructField("conv_id", T.StringType(), True),
-        T.StructField("turn_idx", T.IntegerType(), True),
-        T.StructField("doc_kind", T.StringType(), True),
-        T.StructField("n_source_bytes", T.LongType(), True),
-        T.StructField("extracted_text", T.StringType(), True),
-        T.StructField(
-            "spans",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("start", T.IntegerType(), False),
-                        T.StructField("end", T.IntegerType(), False),
-                    ]
-                )
-            ),
-            True,
-        ),
-        T.StructField("extract_error", T.StringType(), True),
-    ]
-)
+def _layout_to_text(kind, data):
+    """``to_text`` with pdf payloads sent through the positioned-run parser
+    (extract/pdf_layout.py: column detection, reading order, running
+    header/footer removal). Spans do not apply to binary sources."""
+    if kind != "pdf":
+        return to_text(kind, data)
+    text = pdf_layout_extract_fn(data)
+    if text is None:
+        raise ValueError("undecodable PDF payload")
+    return text, []
 
 
-def extract_map_in_arrow(batches):
-    """mapInArrow stage: (conv_id, turn_idx, doc_kind, n_source_bytes, text)
-    → (conv_id, turn_idx, doc_kind, n_source_bytes, extracted_text, spans,
-    extract_error). Keyed columns pass through untouched; only text is
-    consumed. Use with ``_EXTRACT_BATCH_SCHEMA``."""
+def _readability_arrays(kinds, texts):
+    """The readability columns: ``readability_fields`` for html rows, NULL
+    for every other kind."""
     import pyarrow as pa
 
+    rows = [
+        readability_fields(doc) if kind == "html" else _NO_READABILITY
+        for kind, doc in zip(kinds, texts)
+    ]
+    types = [pa.string(), pa.int32(), pa.float64(), pa.float64()]
+    return [pa.array([r[i] for r in rows], t) for i, t in enumerate(types)]
+
+
+def extract_map_in_arrow(batches, pdf_mode: str = "simple", with_readability: bool = False):
+    """mapInArrow body: batches with ``doc_kind`` and ``text`` columns →
+    every column but ``text`` unchanged, then ``extracted_text``, ``spans``,
+    ``extract_error`` and, ``with_readability``, the readability fields.
+
+    Conversion failures don't fail the task: the row carries the error
+    (``"<ExcType>: <msg>"``, 500 chars max) with empty text and spans, and is
+    dropped downstream while lineage counts it (the reference logs and
+    continues, tables/paper_text_table.py:150-152). ``text`` may be a string
+    or binary column."""
+    import pyarrow as pa
+
+    # the kernel is chosen once per stage; the simple kernel is the
+    # module-global to_text as it stands when the stage runs
+    kernel = _layout_to_text if pdf_mode == "layout" else to_text
     span_fields = [
         pa.field("start", pa.int32(), nullable=False),
         pa.field("end", pa.int32(), nullable=False),
@@ -154,7 +134,7 @@ def extract_map_in_arrow(batches):
         for kind, data in zip(kinds, texts):
             err = None
             try:
-                text, sp = to_text(kind, data)
+                text, sp = kernel(kind, data)
             except Exception as exc:  # noqa: BLE001
                 text, sp, err = "", [], f"{type(exc).__name__}: {exc}"[:500]
             out_texts.append(text)
@@ -170,56 +150,34 @@ def extract_map_in_arrow(batches):
                 fields=span_fields,
             ),
         )
-        yield pa.RecordBatch.from_arrays(
-            [
-                batch.column("conv_id"),
-                batch.column("turn_idx"),
-                batch.column("doc_kind"),
-                batch.column("n_source_bytes"),
-                pa.array(out_texts, pa.string()),
-                spans,
-                pa.array(errors, pa.string()),
-            ],
-            names=[
-                "conv_id", "turn_idx", "doc_kind", "n_source_bytes",
-                "extracted_text", "spans", "extract_error",
-            ],
-        )
+        names = [n for n in batch.schema.names if n != "text"]
+        arrays = [batch.column(n) for n in names]
+        names += ["extracted_text", "spans", "extract_error"]
+        arrays += [pa.array(out_texts, pa.string()), spans, pa.array(errors, pa.string())]
+        if with_readability:
+            names += [f.name for f in _READABILITY_FIELDS]
+            arrays += _readability_arrays(kinds, texts)
+        yield pa.RecordBatch.from_arrays(arrays, names=names)
 
 
-@F.pandas_udf(_EXTRACT_RESULT_TYPE)
-def _to_text_layout_udf_impl(doc_kind: pd.Series, payload: pd.Series) -> pd.DataFrame:
-    """Layout-analyzed variant: pdf payloads go through the positioned-run
-    parser (extract/pdf_layout.py — column detection, reading order,
-    header/footer removal; spans not applicable for binary sources), all
-    other kinds are identical to the simple path. Opt-in via
-    convert_transcripts(pdf_mode="layout") — the DEFAULT path stays
-    byte-parity with the reference's stream-order extraction."""
-    from .pdf_layout import pdf_layout_extract_fn
+def extract_stage(
+    df: DataFrame, pdf_mode: str = "simple", with_readability: bool = False
+) -> DataFrame:
+    """The extraction stage as one ``mapInArrow`` over ``df``, which must
+    have ``doc_kind`` and ``text`` columns. The output schema is ``df``'s
+    minus ``text``, plus the result (and readability) fields.
 
-    texts: list[str] = []
-    spans: list[list[dict[str, int]]] = []
-    errors: list[str | None] = []
-    for kind, data in zip(doc_kind, payload):
-        err = None
-        sp: list = []
-        if kind == "pdf":
-            try:
-                text = pdf_layout_extract_fn(data)
-                if text is None:
-                    text, err = "", "ValueError: undecodable PDF payload"
-            except Exception as exc:  # noqa: BLE001
-                text, err = "", f"{type(exc).__name__}: {exc}"[:500]
-        else:
-            try:
-                text, sp2 = to_text(kind, data)
-                sp = sp2
-            except Exception as exc:  # noqa: BLE001
-                text, err = "", f"{type(exc).__name__}: {exc}"[:500]
-        texts.append(text)
-        spans.append([{"start": s, "end": e} for s, e in sp])
-        errors.append(err)
-    return pd.DataFrame({"extracted_text": texts, "spans": spans, "error": errors})
+    ``pdf_mode``: "simple" (stream-order text, byte-parity with the
+    reference's extraction) or "layout" (``_layout_to_text``; an opt-in
+    deviation from reference parity). Undecodable PDFs in layout mode carry
+    ``"ValueError: undecodable PDF payload"``.
 
-
-to_text_layout_udf = _to_text_layout_udf_impl.asNondeterministic()
+    MapInArrow is opaque to Catalyst, so a downstream filter on the output
+    is never pushed below it and the kernel runs once per row."""
+    if pdf_mode not in ("simple", "layout"):
+        raise ValueError(f"pdf_mode must be 'simple' or 'layout', got {pdf_mode!r}")
+    fields = [f for f in df.schema.fields if f.name != "text"] + _RESULT_FIELDS
+    if with_readability:
+        fields += _READABILITY_FIELDS
+    fn = functools.partial(extract_map_in_arrow, pdf_mode=pdf_mode, with_readability=with_readability)
+    return df.mapInArrow(fn, T.StructType(fields))

@@ -181,16 +181,12 @@ def bpe_train(
     pre-tokens) so each round schedules a handful of tasks, not the
     corpus shuffle width."""
     import shutil
-    import tempfile
 
     from ..operators.dedup import _checkpoint_rdd_dirs
+    from ..session import ensure_checkpoint_dir
 
     spark = df.sparkSession
-    sc = spark.sparkContext
-    if sc.getCheckpointDir() is None:
-        base = sc.getConf().get("spark.local.dir", tempfile.gettempdir()).split(",")[0]
-        sc.setCheckpointDir(tempfile.mkdtemp(prefix="bpe-ckpt-", dir=base))
-    resolved = sc.getCheckpointDir()
+    resolved = ensure_checkpoint_dir(spark, "bpe-ckpt-")
 
     @F.pandas_udf(T.ArrayType(T.StringType()))
     def to_syms(words: pd.Series) -> pd.Series:
@@ -204,7 +200,7 @@ def bpe_train(
     counts = counts.persist()
     n_vocab = counts.count()
     parts = loop_partitions or max(
-        1, min(sc.defaultParallelism, n_vocab // 50_000 + 1)
+        1, min(spark.sparkContext.defaultParallelism, n_vocab // 50_000 + 1)
     )
     anchor = counts.repartition(parts).persist()
     anchor.count()

@@ -727,21 +727,17 @@ def connected_components(
     separate contexts or checkpoint dirs.
 
     ``checkpoint_dir``: used via ``sc.setCheckpointDir`` when the context
-    has none configured; defaults to a temp dir under ``spark.local.dir``.
+    has none configured; defaults to a temp dir under the Spark local dir
+    (``session.ensure_checkpoint_dir``).
     Returns a PERSISTED (id, component) table — callers ``.unpersist()`` it
     when done (its checkpoint files back recomputation until the Spark temp
     dirs are cleaned). Raises RuntimeError if the graph has not converged
     within ``max_iterations``."""
     import shutil
-    import tempfile
 
-    sc = edges.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        if checkpoint_dir is None:
-            base = sc.getConf().get("spark.local.dir", tempfile.gettempdir()).split(",")[0]
-            checkpoint_dir = tempfile.mkdtemp(prefix="cc-ckpt-", dir=base)
-        sc.setCheckpointDir(checkpoint_dir)
-    resolved = sc.getCheckpointDir()
+    from ..session import ensure_checkpoint_dir
+
+    resolved = ensure_checkpoint_dir(edges.sparkSession, "cc-ckpt-", checkpoint_dir)
 
     both = edges.select(
         F.col(src_col).alias("u"), F.col(dst_col).alias("v")
@@ -808,7 +804,7 @@ def connected_components(
     # them too or repeated calls leak one label table per call (review r3).
     # On a cluster they stay as the executor-loss recovery source; set
     # spark.cleaner.referenceTracking.cleanCheckpoints there for auto-GC.
-    if sc.master.startswith("local"):
+    if edges.sparkSession.sparkContext.master.startswith("local"):
         for d in prev_dirs:
             shutil.rmtree(d, ignore_errors=True)
     return final

@@ -35,12 +35,12 @@ join (tfidf precedent) — no per-iteration driver round-trip.
 from __future__ import annotations
 
 import shutil
-import tempfile
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import ensure_checkpoint_dir
 from .dedup import _checkpoint_rdd_dirs
 
 __all__ = ["pagerank"]
@@ -63,13 +63,7 @@ def pagerank(
     ``damping_permille``: d·1000 (850 = the classic 0.85)."""
     if not 0 <= damping_permille <= 1000:
         raise ValueError("damping_permille must be in [0, 1000]")
-    sc = edges.sparkSession.sparkContext
-    if sc.getCheckpointDir() is None:
-        if checkpoint_dir is None:
-            base_dir = sc.getConf().get("spark.local.dir", tempfile.gettempdir()).split(",")[0]
-            checkpoint_dir = tempfile.mkdtemp(prefix="pr-ckpt-", dir=base_dir)
-        sc.setCheckpointDir(checkpoint_dir)
-    resolved = sc.getCheckpointDir()
+    resolved = ensure_checkpoint_dir(edges.sparkSession, "pr-ckpt-", checkpoint_dir)
 
     # NULL-endpoint guard lives IN the edge projection (when/otherwise →
     # raise_error, the weighted_sample pattern) so the first edge

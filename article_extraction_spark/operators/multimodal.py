@@ -14,15 +14,15 @@ surfacing a per-row decode_error when it is absent. Round 5: the generic
 extract_media_features kernel now runs the REAL decodes too (pooled
 pixel stats / RMS features via the same dispatchers); the digest vector
 survives only as the per-row fallback for payloads nothing can decode,
-labeled feature_src='digest'.
+labeled feature_src='digest'. Features are extracted by one Arrow-native
+stage (`extract_media_features`, ``mapInArrow``) that hands zero-copy
+payload views to the scalar `_feature_kernel`.
 """
 
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -66,9 +66,8 @@ def _digest_feature(payload, dim: int = 8) -> list[float]:
 
 
 def _feature_kernel(payloads, kinds, mimes, widths, heights):
-    """ONE shared per-payload kernel for the pandas and Arrow twins
-    (review r4: two hand-copied loops let the 'byte-identical' twins
-    drift). Round 5: features are REAL decoded statistics —
+    """The per-payload feature kernel. Features are REAL decoded
+    statistics —
 
       * image → per-channel mean + std of the decoded pixels (6) plus
         log-scaled height/width (2), via `_decode_image` (native-first,
@@ -133,39 +132,9 @@ def _feature_kernel(payloads, kinds, mimes, widths, heights):
     return n_bytes, hashes, feats, srcs
 
 
-def extract_media_features(media: DataFrame, batch_note_col: bool = False) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads: REAL decoded
-    image/audio statistics via the shared `_feature_kernel`, digest
-    fallback for rows nothing can decode (labeled in feature_src)."""
-
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes, hashes, feats, srcs = _feature_kernel(
-                list(pdf["payload"]),
-                list(pdf["kind"]),
-                list(pdf["mime"]),
-                list(pdf["width"]),
-                list(pdf["height"]),
-            )
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": n_bytes,
-                    "content_hash": hashes,
-                    "feature": feats,
-                    "feature_src": srcs,
-                }
-            )
-
-    return media.mapInPandas(op, schema=FEATURES_SCHEMA)
-
-
 def _binary_views(arr):
     """Zero-copy memoryviews into a pa.BinaryArray's data buffer (None for
-    null slots). Hashing/sizing then never materializes python bytes —
-    the point of the Arrow twin (review r5: the old `p.as_py()` loop made
-    the 'no materialization' docstring claim false)."""
+    null slots). Hashing/sizing then never materializes python bytes."""
     import numpy as np
     import pyarrow as pa
 
@@ -184,14 +153,15 @@ def _binary_views(arr):
     ]
 
 
-def extract_media_features_arrow(media: DataFrame) -> DataFrame:
-    """Arrow-native twin of `extract_media_features` via ``mapInArrow``:
-    payload sizing + sha256 run over zero-copy memoryview slices of the
+def extract_media_features(media: DataFrame) -> DataFrame:
+    """Feature extraction over binary payloads as one ``mapInArrow`` stage:
+    REAL decoded image/audio statistics via `_feature_kernel`, digest
+    fallback for rows nothing can decode (labeled in feature_src).
+    Payload sizing + sha256 run over zero-copy memoryview slices of the
     Arrow data buffer (`_binary_views`) — no per-row python-bytes
     materialization for the hash path, which matters when payloads are
     megabytes each; only rows that actually DECODE convert to ``bytes``
-    once inside the decoder. Output is identical to the pandas twin
-    (parity-tested); both call the one shared `_feature_kernel`."""
+    once inside the decoder."""
 
     def op(batches):
         import pyarrow as pa
@@ -399,37 +369,46 @@ def _decode_image(mime, payload, width, height):
     return _pil_decode(mime, payload)
 
 
+def _map_rows(media: DataFrame, cols: list[str], row_fn, schema: T.StructType) -> DataFrame:
+    """One ``mapInArrow`` stage: ``row_fn(*values of cols)`` → one output
+    row tuple (in ``schema`` order) per input row."""
+
+    def op(batches):
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        target = to_arrow_schema(schema)
+        for batch in batches:
+            rows = [row_fn(*vals) for vals in zip(*(batch.column(c).to_pylist() for c in cols))]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array([r[i] for r in rows], f.type) for i, f in enumerate(target)], schema=target
+            )
+
+    return media.mapInArrow(op, schema)
+
+
 def image_pixel_features(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame:
     """Per-image channel stats + a nearest-neighbor thumbnail over REAL
     decoded pixels (`_decode_image`: native-first, stdlib-codec fallback;
     undecodable rows get decode_error, the task never fails)."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mime, payload, w, h in zip(
-                pdf["media_id"], pdf["mime"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                try:
-                    img = _decode_image(mime, payload, w, h)
-                    thumb = resize_nearest(img, out_w, out_h).astype(np.float64) / 255.0
-                    rows.append(
-                        (
-                            mid,
-                            [float(x) for x in img.reshape(-1, 3).mean(axis=0) / 255.0],
-                            [float(x) for x in img.reshape(-1, 3).std(axis=0) / 255.0],
-                            [float(x) for x in thumb.ravel()],
-                            None,
-                        )
-                    )
-                except Exception as exc:  # noqa: BLE001
-                    rows.append((mid, None, None, None, f"{type(exc).__name__}: {exc}"[:300]))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "channel_mean", "channel_std", "thumb", "decode_error"]
+    def row(mid, mime, payload, w, h):
+        try:
+            img = _decode_image(mime, payload, w, h)
+            thumb = resize_nearest(img, out_w, out_h).astype(np.float64) / 255.0
+            return (
+                mid,
+                [float(x) for x in img.reshape(-1, 3).mean(axis=0) / 255.0],
+                [float(x) for x in img.reshape(-1, 3).std(axis=0) / 255.0],
+                [float(x) for x in thumb.ravel()],
+                None,
             )
+        except Exception as exc:  # noqa: BLE001
+            return (mid, None, None, None, f"{type(exc).__name__}: {exc}"[:300])
 
-    return media.where(F.col("kind") == "image").mapInPandas(op, schema=IMAGE_FEATURES_SCHEMA)
+    images = media.where(F.col("kind") == "image")
+    return _map_rows(images, ["media_id", "mime", "payload", "width", "height"], row, IMAGE_FEATURES_SCHEMA)
 
 
 def _soundfile_decode(mime, payload):
@@ -482,23 +461,18 @@ def audio_pcm_stats(media: DataFrame) -> DataFrame:
     stdlib-``wave`` fallback) — real sample math."""
     import numpy as np
 
-    def op(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, mime, payload in zip(pdf["media_id"], pdf["mime"], pdf["payload"]):
-                try:
-                    pcm = _decode_audio(mime, payload)
-                    rows.append(
-                        (
-                            mid,
-                            int(pcm.size),
-                            float(np.sqrt((pcm**2).mean())) if pcm.size else 0.0,
-                            float(np.abs(pcm).max()) if pcm.size else 0.0,
-                            None,
-                        )
-                    )
-                except Exception as exc:  # noqa: BLE001
-                    rows.append((mid, None, None, None, f"{type(exc).__name__}: {exc}"[:300]))
-            yield pd.DataFrame(rows, columns=["media_id", "n_samples", "rms", "peak", "decode_error"])
+    def row(mid, mime, payload):
+        try:
+            pcm = _decode_audio(mime, payload)
+            return (
+                mid,
+                int(pcm.size),
+                float(np.sqrt((pcm**2).mean())) if pcm.size else 0.0,
+                float(np.abs(pcm).max()) if pcm.size else 0.0,
+                None,
+            )
+        except Exception as exc:  # noqa: BLE001
+            return (mid, None, None, None, f"{type(exc).__name__}: {exc}"[:300])
 
-    return media.where(F.col("kind") == "audio").mapInPandas(op, schema=AUDIO_STATS_SCHEMA)
+    audio = media.where(F.col("kind") == "audio")
+    return _map_rows(audio, ["media_id", "mime", "payload"], row, AUDIO_STATS_SCHEMA)

@@ -36,6 +36,24 @@ def make_pyfiles_zip(dest: str | None = None) -> str:
     return dest
 
 
+def ensure_checkpoint_dir(spark: SparkSession, prefix: str, checkpoint_dir: str | None = None) -> str:
+    """The context's reliable-checkpoint directory, set first if it has none:
+    ``checkpoint_dir`` when given, else a fresh ``<prefix>*`` temp dir under
+    the first Spark local dir — ``SPARK_LOCAL_DIRS`` (which overrides the
+    conf, as in Spark itself), then ``spark.local.dir``, then the system temp
+    dir; that base dir is created if missing. Returns the resolved
+    ``<dir>/<uuid>`` path ``sc.getCheckpointDir()`` reports."""
+    sc = spark.sparkContext
+    if sc.getCheckpointDir() is None:
+        if checkpoint_dir is None:
+            local_dirs = os.environ.get("SPARK_LOCAL_DIRS") or sc.getConf().get("spark.local.dir")
+            base = (local_dirs or tempfile.gettempdir()).split(",")[0]
+            os.makedirs(base, exist_ok=True)
+            checkpoint_dir = tempfile.mkdtemp(prefix=prefix, dir=base)
+        sc.setCheckpointDir(checkpoint_dir)
+    return sc.getCheckpointDir()
+
+
 def get_spark(
     app_name: str = "article_extraction_spark",
     master: str | None = None,

@@ -180,6 +180,49 @@ def test_convert_transcripts_pdf_mode_layout(spark):
         convert_transcripts(t, pdf_mode="bogus")
 
 
+def test_convert_transcripts_layout_with_readability(spark):
+    """Both opt-ins at once: PDF turns still take the layout parser (running
+    headers stripped, columns in reading order) and html turns still get
+    the readability columns; non-html turns get NULL readability."""
+    import datetime as dt
+
+    from article_extraction_spark.extract.readability import readability_main_text
+    from article_extraction_spark.pipeline import convert_transcripts
+
+    pdf = base64.b64encode(
+        make_layout_pdf_bytes(
+            pages=[[["left one", "left two"], ["right one"]], [["p2 left"], ["p2 right"]]],
+            header="Running Head",
+        )
+    ).decode()
+    html = (
+        "<html><body><div><a href='/'>home</a> menu</div><article><p>"
+        + "Main content, with commas, and more words. " * 3
+        + "</p></article></body></html>"
+    )
+    ts = dt.datetime(2024, 1, 1)
+    rows = [
+        ("c1", 0, "user", pdf, None, ts),
+        ("c1", 1, "assistant", html, None, ts),
+        ("c1", 2, "tool", "plain text", None, ts),
+    ]
+    t = spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+    got = {
+        r["turn_idx"]: r
+        for r in convert_transcripts(t, pdf_mode="layout", with_readability=True).collect()
+    }
+    expected_pdf = pdf_layout_extract_fn(pdf)
+    assert "Running Head" not in expected_pdf
+    assert got[0]["extracted_text"] == expected_pdf
+    assert got[0]["readability_text"] is None and got[0]["link_density"] is None
+    assert got[1]["extracted_text"].startswith("Main content")
+    assert got[1]["readability_text"] == readability_main_text(html)
+    assert 0.0 < got[1]["link_density"] < 1.0
+    assert got[2]["readability_text"] is None and got[2]["link_density"] is None
+
+
 def test_pdf_string_unescape_single_pass():
     """review r3: sequential replaces corrupted literal backslashes —
     (C:\\\\nightly) must unescape to C:\\nightly, not C:<LF>ightly; octal

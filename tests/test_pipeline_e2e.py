@@ -86,44 +86,86 @@ def test_doc_kind_classification_matches_python(spark):
         assert r["k"] == classify_payload(r["text"])
 
 
-def test_arrow_extraction_stage_matches_pandas_udf_path(spark):
-    """r8: the default (simple, no-readability) convert path runs the
-    Arrow-native mapInArrow extraction stage; its output — text, spans,
-    error capture, byte counts — must be row-identical to the legacy
-    pandas-UDF path (pdf_mode='layout' exercises that path's plumbing for
-    html/txt/json rows via the same to_text kernel)."""
-    from pyspark.sql import functions as F
+def _scalar_row(kernel, kind, data):
+    """What the extraction stage must emit for one row: the scalar kernel's
+    (text, spans), or ("", [], "<ExcType>: <msg>") when it raises."""
+    try:
+        text, spans = kernel(kind, data)
+        return text, [tuple(s) for s in spans], None
+    except Exception as exc:  # noqa: BLE001
+        return "", [], f"{type(exc).__name__}: {exc}"[:500]
 
-    from article_extraction_spark.extract.udfs import (
-        _EXTRACT_BATCH_SCHEMA,
-        extract_map_in_arrow,
-        to_text_udf,
-    )
 
+def _layout_scalar(kind, data):
+    from article_extraction_spark.extract.core import to_text
+    from article_extraction_spark.extract.pdf_layout import pdf_layout_extract_fn
+
+    if kind != "pdf":
+        return to_text(kind, data)
+    text = pdf_layout_extract_fn(data)
+    if text is None:
+        raise ValueError("undecodable PDF payload")
+    return text, []
+
+
+def test_arrow_extraction_stage_matches_scalar_kernels(spark):
+    """The one Arrow extraction stage, row by row against the scalar
+    kernels: extract.core.to_text (simple), pdf_layout_extract_fn (layout
+    pdf rows) and readability_fields (html rows). Covers error capture,
+    NULL payloads, a binary text column, and pass-through of every
+    non-text column."""
+    import base64
+
+    from article_extraction_spark.extract.core import to_text
+    from article_extraction_spark.extract.readability import readability_fields
+    from article_extraction_spark.extract.udfs import extract_stage
+    from article_extraction_spark.fixtures.synth import make_layout_pdf_bytes
+
+    layout_pdf = base64.b64encode(
+        make_layout_pdf_bytes(pages=[[["l1", "l2"], ["r1"]], [["p2"], ["p2r"]]], header="Head")
+    ).decode()
     rows = [
         ("c1", 0, "html", "<p>alpha</p><div>skip</div><p>beta</p>"),
         ("c1", 1, "html", "<p></p>"),                      # drops: no paragraphs
         ("c1", 2, "html", "&amp; <p>entity path</p>"),      # parser fallback
         ("c1", 3, "pdf", "JVBERi0xLjQKJSVFT0Y="),           # undecodable → error
         ("c1", 4, "pdf", "%PDF-garbage"),                   # error path
-        ("c2", 0, "html", "<p>  padded  </p>\n<p>two</p>"),
+        ("c1", 5, "pdf", layout_pdf),                       # layout differs from simple
+        ("c1", 6, "html", None),                            # NULL payloads
+        ("c1", 7, "pdf", None),
+        ("c1", 8, "txt", "plain"),
+        ("c1", 9, None, "<p>no kind</p>"),
+        ("c2", 0, "html", "<div><a href='/'>nav</a></div><p>  padded, text  </p>\n<p>two</p>"),
     ]
     df = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, doc_kind string, text string"
     ).withColumn("n_source_bytes", F.octet_length("text").cast("long"))
+    binary = df.withColumn("text", F.encode("text", "utf-8"))
+    kernels = {"simple": to_text, "layout": _layout_scalar}
 
-    arrow = df.mapInArrow(extract_map_in_arrow, _EXTRACT_BATCH_SCHEMA)
-    legacy = df.withColumn("_r", to_text_udf(F.col("doc_kind"), F.col("text"))).select(
-        "conv_id", "turn_idx", "doc_kind", "n_source_bytes",
-        F.col("_r.extracted_text").alias("extracted_text"),
-        F.col("_r.spans").alias("spans"),
-        F.col("_r.error").alias("extract_error"),
-    )
-    a = sorted(map(tuple, arrow.collect()))
-    b = sorted(map(tuple, legacy.collect()))
-    assert a == b
-    # spans survive as real offsets through the arrow batch assembly
-    by_key = {(r[0], r[1]): r for r in a}
-    good = by_key[("c1", 0)]
-    assert good[4] == "alpha\nbeta" and [tuple(s) for s in good[5]] == [(3, 8), (30, 34)]
-    assert by_key[("c1", 3)][6] is not None  # error captured, not raised
+    for src, payloads in ((df, {(r[0], r[1]): r[3] for r in rows}),
+                          (binary, {(r[0], r[1]): None if r[3] is None else r[3].encode() for r in rows})):
+        for mode, kernel in kernels.items():
+            out = extract_stage(src, pdf_mode=mode, with_readability=True)
+            assert out.columns == [
+                "conv_id", "turn_idx", "doc_kind", "n_source_bytes", "extracted_text", "spans",
+                "extract_error", "readability_text", "n_blocks", "max_block_score", "link_density",
+            ]
+            got = out.collect()
+            assert len(got) == len(rows)
+            for r in got:
+                data = payloads[(r["conv_id"], r["turn_idx"])]
+                want = _scalar_row(kernel, r["doc_kind"], data)
+                assert (r["extracted_text"], [tuple(s) for s in r["spans"]], r["extract_error"]) == want, (mode, r)
+                assert r["n_source_bytes"] == (None if data is None else len(data))
+                rd = (r["readability_text"], r["n_blocks"], r["max_block_score"], r["link_density"])
+                assert rd == (readability_fields(data) if r["doc_kind"] == "html" else (None,) * 4)
+
+    # the cases above really exercise each path
+    by_key = {(r["conv_id"], r["turn_idx"]): r for r in extract_stage(df, pdf_mode="layout").collect()}
+    assert by_key[("c1", 0)]["extracted_text"] == "alpha\nbeta"
+    assert [tuple(s) for s in by_key[("c1", 0)]["spans"]] == [(3, 8), (30, 34)]
+    assert by_key[("c1", 3)]["extract_error"] == "ValueError: undecodable PDF payload"
+    assert "Head" not in by_key[("c1", 5)]["extracted_text"]
+    assert "Head" in _scalar_row(to_text, "pdf", layout_pdf)[0]
+    assert by_key[("c1", 6)]["extracted_text"] == ""

@@ -49,19 +49,34 @@ def test_top_k_compiles_to_take_ordered(spark):
 
 def test_native_branch_has_no_python(spark):
     """txt/json passthrough must stay JVM-side; only the html/pdf branch may
-    cross into Python (the anti-scaling fix — convert.py routing)."""
+    cross into Python (the anti-scaling fix — convert.py routing), and in
+    every mode it does so through the one Arrow extraction stage."""
     from article_extraction_spark.pipeline.convert import convert_transcripts
     from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
 
     t = spark.createDataFrame([], TRANSCRIPTS_SCHEMA)
-    out = convert_transcripts(t, num_partitions=2)
-    plan = _plan(out)
-    # exactly ONE python-eval operator (the html/pdf branch), none for
-    # native (r8: the default path is the Arrow-native MapInArrow stage)
-    assert plan.count("MapInArrow") == 1
-    assert plan.count("ArrowEvalPython") == 0
-    # and the union has a pure-projection second branch
-    assert "Union" in plan
+    for opts in [{}, {"pdf_mode": "layout"}, {"with_readability": True},
+                 {"pdf_mode": "layout", "with_readability": True}, {"drop_empty": False}]:
+        plan = _plan(convert_transcripts(t, num_partitions=2, **opts))
+        # exactly ONE python-eval operator (the html/pdf branch), none for native
+        assert plan.count("MapInArrow") == 1, (opts, plan)
+        assert plan.count("ArrowEvalPython") == 0, (opts, plan)
+        # and the union has a pure-projection second branch
+        assert "Union" in plan
+
+
+def test_streaming_extract_single_arrow_stage(spark, tmp_path):
+    """The streaming extraction plan crosses into Python once, through the
+    same Arrow extraction stage as the batch pipeline."""
+    from article_extraction_spark.schemas import TRANSCRIPTS_SCHEMA
+    from article_extraction_spark.streaming import streaming_extract
+
+    spark.createDataFrame([], TRANSCRIPTS_SCHEMA).write.parquet(str(tmp_path / "in"))
+    plan = streaming_extract(spark, str(tmp_path / "in"))._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("simple")
+    )
+    assert plan.count("MapInArrow") == 1, plan
+    assert plan.count("ArrowEvalPython") == 0, plan
 
 
 def test_ordered_output_uses_range_partitioning(spark):

@@ -314,6 +314,16 @@ def test_heavy_hitters_exact_and_pruned(spark):
         heavy_hitters(df, "k", 0.5, d=8, w=10000)
 
 
+def test_heavy_hitters_statically_empty_input(spark):
+    """A statically-empty input (PropagateEmptyRelation removes the observed
+    scan, so the Observation never fires) has no heavy hitters — it must
+    not crash on the unfired observation."""
+    from article_extraction_spark.operators.sketches import heavy_hitters
+
+    df = spark.createDataFrame([], "k string")
+    assert heavy_hitters(df, "k", 0.1).collect() == []
+
+
 def test_heavy_hitters_rejects_geometry_mismatch(spark):
     """Review r7: a caller-passed sketch with different d/w would silently
     drop true heavy hitters (estimates read zero-filled cells) — the

@@ -388,6 +388,32 @@ def test_connected_components(spark):
     assert after - before == set(), after - before
 
 
+def test_checkpoint_dir_created_under_spark_local_dirs(spark, tmp_path, monkeypatch):
+    """With no checkpoint dir on the context, connected_components puts its
+    checkpoints under SPARK_LOCAL_DIRS (which overrides spark.local.dir),
+    creating that base dir when it does not exist yet."""
+    from article_extraction_spark.operators.dedup import connected_components
+
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    prev = jsc.checkpointDir()
+    set_dir = getattr(jsc, "checkpointDir_$eq")
+    base = tmp_path / "not-yet" / "local"
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", f"{base},{tmp_path / 'second'}")
+    set_dir(spark._jvm.scala.Option.empty())
+    try:
+        edges = spark.createDataFrame([(1, 2), (2, 3)], "id_a long, id_b long")
+        labels = connected_components(edges)
+        got = {r["id"]: r["component"] for r in labels.collect()}
+        labels.unpersist(blocking=True)
+        resolved = sc.getCheckpointDir()
+    finally:
+        set_dir(prev)
+    assert got == {1: 1, 2: 1, 3: 1}
+    assert resolved.startswith(f"file:{base}/cc-ckpt-") or resolved.startswith(f"{base}/cc-ckpt-"), resolved
+    assert base.is_dir() and not (tmp_path / "second").exists()
+
+
 def test_connected_components_cleans_checkpoints(spark):
     """r3: CC uses public reliable .checkpoint() (no _jsc bookkeeping);
     superseded rounds' checkpoint files are swept, only the final round's
@@ -1290,35 +1316,49 @@ def test_zorder_append_widens_domain_and_stays_correct(spark, tmp_path):
     assert got == list(range(90, 100)) + list(range(1000, 1011))
 
 
-def test_media_features_arrow_twin_parity(spark):
-    """mapInArrow twin must produce byte-identical output to the pandas
-    twin over the same media batch (nulls included)."""
+def test_media_features_match_scalar_kernel(spark):
+    """The Arrow feature stage, row by row against the scalar
+    `_feature_kernel` over the same payloads (nulls, undecodable payloads
+    and float32 feature rounding included)."""
+    import numpy as np
+
     from article_extraction_spark.operators.multimodal import (
         MEDIA_SCHEMA,
+        _feature_kernel,
         extract_media_features,
-        extract_media_features_arrow,
     )
 
     rows = [
         (1, "image", bytearray(b"\x01\x02\x03" * 100), "image/raw-rgb8", 10, 10, None),
         (2, "audio", bytearray(b"\x00\x10" * 500), "audio/pcm16", None, None, 100),
         (3, "video", None, "video/mp4", None, None, 5000),
+        (4, "image", bytearray(b"\x89PNG corrupt"), "image/png", 4, 4, None),
+        (5, "audio", bytearray(), "audio/pcm16", None, None, 0),
     ]
     media = spark.createDataFrame(rows, MEDIA_SCHEMA)
-    a = sorted(map(tuple, extract_media_features(media).collect()))
-    b = sorted(map(tuple, extract_media_features_arrow(media).collect()))
-    assert a == b
-    assert len(a) == 3
-    null_row = next(t for t in a if t[0] == 3)
-    assert null_row[3] is None  # null payload → null hash on both paths
+    got = {r["media_id"]: r for r in extract_media_features(media).collect()}
+    n_bytes, hashes, feats, srcs = _feature_kernel(
+        [None if r[2] is None else bytes(r[2]) for r in rows],
+        [r[1] for r in rows],
+        [r[3] for r in rows],
+        [r[4] for r in rows],
+        [r[5] for r in rows],
+    )
+    assert sorted(got) == [r[0] for r in rows]
+    for i, row in enumerate(rows):
+        g = got[row[0]]
+        assert (g["kind"], g["n_bytes"], g["content_hash"], g["feature_src"]) == (
+            row[1], n_bytes[i], hashes[i], srcs[i]
+        )
+        np.testing.assert_array_equal(np.float32(g["feature"]), np.float32(feats[i]))
+    assert got[3]["content_hash"] is None  # null payload → null hash
+    assert got[4]["feature_src"] == "digest"
 
     # round 5: the features are REAL decoded stats, not the digest fake
-    by_id = {t[0]: t for t in a}
+    by_id = {k: tuple(v) for k, v in got.items()}
     assert by_id[1][5] == "image" and by_id[2][5] == "audio"
     assert by_id[3][5] == "null"
     # raw-rgb8 repeating (1,2,3): channel means are 1/255, 2/255, 3/255
-    import numpy as np
-
     np.testing.assert_allclose(by_id[1][4][:3], [1 / 255, 2 / 255, 3 / 255], atol=1e-6)
     np.testing.assert_allclose(by_id[1][4][3:6], [0.0, 0.0, 0.0], atol=1e-6)
     # pcm16 alternating 0x1000: rms/peak of the real samples

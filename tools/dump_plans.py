@@ -77,11 +77,12 @@ def main() -> None:
     sections.append(
         (
             "convert_to_txt pipeline",
-            "Exactly ONE ArrowEvalPython (html/pdf branch, AFTER the salted "
-            "exchange); the txt/json branch is a pure JVM projection unioned in. "
-            "The extraction UDF is marked non-deterministic so the drop-empty "
-            "filter cannot be pushed below the shuffle (which would evaluate "
-            "the UDF twice).",
+            "Exactly ONE MapInArrow (the extraction stage on the html/pdf "
+            "branch, AFTER the salted exchange) and no ArrowEvalPython, in "
+            "every pdf_mode/with_readability combination; the txt/json branch "
+            "is a pure JVM projection unioned in. MapInArrow is opaque to "
+            "filter pushdown, so the drop-empty filter stays above it and the "
+            "kernel runs once per row.",
             plan_str(convert_transcripts(t, num_partitions=4)),
         )
     )
